@@ -50,10 +50,6 @@ object GraphOps {
       edges.select(col("src").as("node")).distinct(),
       Seq("node"), "left_anti")
 
-  /** Chain-head predicate `node % k == 1` (pageRank_v2.java:145,165). */
-  def isChainHead(k: Long) = (col("node") % k) === 1
-
-  /** Explode an adjacency state back to an edge list (O4 inverse of O7). */
   /** Connected components by min-label propagation over the
     * symmetrized graph, iterated to convergence (bounded by
     * `maxRounds`); returns (node, component) where component is the
@@ -554,6 +550,7 @@ object GraphOps {
     out
   }
 
+  /** Explode an adjacency state back to an edge list (O4 inverse of O7). */
   def explodeAdjacency(adj: DataFrame): DataFrame =
     adj.select(col("node").as("src"), explode(col("adj")).as("dst"))
 }
